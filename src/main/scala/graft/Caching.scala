@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.storage.StorageLevel
 
 /** Cache policy knob for operators whose returned (lazy) frame reads
@@ -13,47 +14,66 @@ import org.apache.spark.storage.StorageLevel
   * shared branches), or any explicit level (e.g. `DISK_ONLY`) to
   * bound memory. The default matches `Dataset.cache()`. Streaming
   * frames are never persisted (unsupported by Spark).
+  *
+  * Who releases what: a caller that owns its terminal actions wraps
+  * them in [[releasing]], which unpersists every frame its thread
+  * stored through [[persisted]] / [[staged]] meanwhile — stage
+  * boundaries and operator-internal caches alike — through the
+  * persisted handles, never through a cut frame (a cut's own
+  * `unpersist()` names a plan no cache entry holds, so it frees
+  * nothing). Entries another call had already stored are left alone.
+  * Frames persisted outside a [[releasing]] block stay cached until
+  * their caller unpersists them or clears the cache.
   */
 object Caching {
   /** Same level `Dataset.cache()` uses. */
   val Default: StorageLevel = StorageLevel.MEMORY_AND_DISK
 
+  // per thread, not inherited: a pool thread started inside a
+  // releasing block must not keep appending to its buffer
+  private val stored = new ThreadLocal[collection.mutable.Buffer[DataFrame]]
+
   def persisted(df: DataFrame, level: StorageLevel): DataFrame =
-    if (level == StorageLevel.NONE || df.isStreaming) df else df.persist(level)
+    if (level == StorageLevel.NONE || df.isStreaming) df
+    else {
+      // record only entries this call creates: persist returns `df`
+      // itself, the handle that releases them
+      if (df.storageLevel == StorageLevel.NONE) Option(stored.get).foreach(_ += df)
+      df.persist(level)
+    }
 
   /** Stage-boundary form of [[persisted]] for DEEP multi-stage
-    * pipelines (the curation chains): persist the frame AND truncate
-    * its logical plan (lazy `localCheckpoint` — computation still
-    * deferred to first use, blocks held at [[Default]] level). A
-    * plain persist leaves the full upstream tree in every downstream
-    * plan, and a stage containing a self-join duplicates that entire
-    * subtree PER REFERENCE — so an N-stage chain's final action hands
-    * Catalyst an exponentially-unfolded tree (measured: the c6
-    * selection pipeline spent 4.4 s in analysis/planning before its
-    * first job, over half the row's bench cost; the optimization
-    * guide's §3.3 "materialise an intermediate to truncate the plan").
-    * With the boundary truncated, each stage is analyzed once, as a
-    * small plan over a leaf.
+    * pipelines (the curation chains): persist the frame and return a
+    * frame whose plan is one leaf reading the persisted blocks
+    * ([[org.apache.spark.sql.graft.ColumnBridge.cachedLeaf]]). A plain
+    * persist leaves the full upstream tree in every downstream plan,
+    * and a stage containing a self-join duplicates that subtree PER
+    * REFERENCE — an N-stage chain's final action then hands Catalyst
+    * an exponentially-unfolded tree (measured: the c6 selection
+    * pipeline spent 4.4 s in analysis/planning before its first job).
+    * Over the leaf each stage is analyzed once, so planning is
+    * O(stages); the boundary is stored once, in its CacheManager
+    * entry; and sibling calls that compose the identical stages get
+    * the identical leaf back, so every stage of theirs — not just the
+    * first — matches the cache and shares one materialization.
+    * Building the leaf runs the frame's shuffle stages (adaptive
+    * execution materializes them to plan the cache scan); its final
+    * stage stays lazy.
     *
-    * The frame is ALSO persist()ed before truncation: the persist
-    * registers the canonical plan with the CacheManager, so sibling
-    * queries in one session that compose the identical stage subtree
-    * (the c-family all share gate→dedup→near-dup heads) still share
-    * ONE materialization — dropping that registration measurably
-    * tripled the cheap family members (c1 0.27→1.26 s fleet) while the
-    * truncation was saving the deep ones. The checkpoint materializes
-    * THROUGH the registered cache, so the blocks are populated either
-    * way; the cost is double storage of stage-boundary frames (cache +
-    * checkpoint blocks) — bounded by the pipeline's working set, the
-    * price of O(stages) planning instead of O(2^stages).
-    *
-    * Same caller-owned lifecycle as [[persisted]]; `NONE` opts out of
-    * storage and truncation both (the plan-recompute semantics some
-    * long-lived sessions prefer). Unlike [[persisted]], a lost
-    * executor means recomputing the QUERY, not the block — acceptable
-    * for bounded pipeline runs, wrong for frames that must survive
-    * partial cluster loss (keep [[persisted]] there). */
+    * `NONE` opts out of storage and the cut both (the
+    * plan-recompute semantics some long-lived sessions prefer). */
   def staged(df: DataFrame, level: StorageLevel): DataFrame =
     if (level == StorageLevel.NONE || df.isStreaming) df
-    else persisted(df, level).localCheckpoint(eager = false)
+    else ColumnBridge.cachedLeaf(persisted(df, level))
+
+  /** Run `body`, then unpersist every frame this thread newly stored
+    * through [[persisted]] / [[staged]] while it ran, last-stored
+    * first. For callers whose result no longer reads those frames
+    * (reports that return collected numbers). */
+  def releasing[T](body: => T): T = {
+    val (outer, mine) = (stored.get, collection.mutable.Buffer.empty[DataFrame])
+    stored.set(mine)
+    try body
+    finally { stored.set(outer); mine.reverseIterator.foreach(_.unpersist()) }
+  }
 }

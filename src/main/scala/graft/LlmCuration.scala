@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 import org.apache.spark.storage.StorageLevel
 
-import graft.dedup.TextDedup
+import graft.dedup.{Decontaminate, TextDedup}
 import graft.text.{Dsir, NaiveBayes, TextAnalysis}
 
 /** End-to-end training-data curation pipeline — the document-corpus
@@ -25,8 +25,134 @@ import graft.text.{Dsir, NaiveBayes, TextAnalysis}
   *
   * Stage order matters at scale: the map-only gates run first so every
   * shuffle-bearing stage sees the smallest possible corpus.
+  *
+  * The stage-list contract: each pipeline shape is declared once, as
+  * an ordered list of named [[Stage]]s, and both the `run*` pipeline
+  * and its `attritionReport*` ops log are that list handed to one
+  * runner ([[pipeline]] / [[report]]). A report row and the pipeline
+  * it describes therefore execute the same stage functions in the
+  * same order.
   */
 object LlmCuration {
+
+  /** One named stage. `readsTwice`: the stage reads its input frame
+    * twice (a self-join, or a score joined back onto its pool), so
+    * pipeline mode stores the boundary that feeds it. */
+  private final case class Stage(name: String, readsTwice: Boolean,
+                                 op: DataFrame => DataFrame)
+
+  /** Pipeline mode: the last stage's frame. A boundary is stored
+    * ([[Caching.staged]]) exactly where the next stage reads it twice;
+    * the result is lazy, so the stored boundaries stay cached for the
+    * caller's action (the [[Caching]] contract). */
+  private def pipeline(in: DataFrame, stages: Seq[Stage],
+                       storage: StorageLevel): DataFrame =
+    stages.zipWithIndex.foldLeft(in) { case (df, (s, i)) =>
+      s.op(if (s.readsTwice && i > 0) Caching.staged(df, storage) else df)
+    }
+
+  /** Report mode: one row per stage (stage_no, stage, n_in, n_out,
+    * drop_frac). Every non-final boundary is stored so its stage is
+    * computed once and feeds both its `count()` and the next stage;
+    * everything the call stored is released before it returns.
+    * drop_frac is one IEEE division of exact longs, 6-dp quantized,
+    * null when an upstream stage emptied the corpus. */
+  private def report(in: DataFrame, stages: Seq[Stage],
+                     storage: StorageLevel): DataFrame = {
+    val spark = in.sparkSession
+    import spark.implicits._
+    val counts = Caching.releasing {
+      stages.zipWithIndex.scanLeft((in, in.count())) { case ((df, _), (s, i)) =>
+        val out = s.op(df)
+        val next = if (i < stages.size - 1) Caching.staged(out, storage) else out
+        (next, next.count())
+      }.map(_._2)
+    }
+    stages.zipWithIndex.map { case (s, i) => (i + 1, s.name, counts(i), counts(i + 1)) }
+      .toDF("stage_no", "stage", "n_in", "n_out")
+      // §6 quantizer (Quantize scaladoc): engine-identical at the
+      // half boundary, unlike round(double, n)
+      .withColumn("drop_frac", when(col("n_in") === 0, lit(null))
+        .otherwise(graft.functions.Quantize.qdp(lit(1.0) -
+          col("n_out").cast("double") / col("n_in").cast("double"), 6)))
+  }
+
+  /** gate → exact_dedup → near_dup, the head of every chain.
+    *  - gate: the map-only quality + language gate → (doc_id, text);
+    *  - exact_dedup: min-id keeper per content hash;
+    *  - near_dup: survivors of the greedy MinHash-LSH drop, keeping
+    *    (doc_id, text). */
+  private def core(id: Column, text: Column, minQuality: Double,
+                   lang: Option[String], minJaccard: Double,
+                   storage: StorageLevel): Seq[Stage] = Seq(
+    Stage("gate", readsTwice = false, { docs =>
+      val scored = TextAnalysis.qualityFeatures(
+          docs.select(id.as("doc_id"), text.as("text")), col("text"))
+        .withColumn("lang_pred", TextAnalysis.langId(col("text")))
+      lang.foldLeft(scored.filter(col("quality_score") >= minQuality)) {
+        (df, l) => df.filter(col("lang_pred") === l)
+      }.select("doc_id", "text")
+    }),
+    Stage("exact_dedup", readsTwice = false,
+      _.groupBy(md5(col("text")).as("__h"))
+        .agg(min(col("doc_id")).as("doc_id"), first(col("text")).as("text"))
+        .select("doc_id", "text")),
+    Stage("near_dup", readsTwice = true, { uniq =>
+      val pairs = TextDedup.minHashLshPairs(uniq, col("doc_id"), col("text"),
+        minJaccard, storage)
+      uniq.join(pairs.select(col("doc_b").as("doc_id")).distinct(),
+        Seq("doc_id"), "left_anti")
+    }))
+
+  /** decontam: survivors sharing any word `n`-gram with the eval
+    * corpus drop ([[Decontaminate.applyFilter]] — broadcast eval
+    * shingle set, map-only probe). Always LAST: the probe then sees
+    * the smallest surviving corpus, and eval membership must win over
+    * every retention decision — if the eval docs ride in `docs` (the
+    * usual setup), they self-hit and drop here. */
+  private def decontam(eval: DataFrame, n: Int): Stage =
+    Stage("decontam", readsTwice = true,
+      Decontaminate.applyFilter(_, eval, "doc_id", col("text"), n))
+
+  /** model_gate, frozen form: keep the pool docs the NB model routes
+    * to `keepLabel` with margin >= `minMargin`. Docs the model has NO
+    * evidence for (all tokens out-of-vocabulary → no score row, or a
+    * null margin) drop: a selection gate admits on evidence, it does
+    * not pass on silence. */
+  private def modelGate(nbModel: DataFrame, nbPriors: DataFrame,
+                        keepLabel: String, minMargin: Double): Stage =
+    Stage("model_gate", readsTwice = true, { pool =>
+      val admitted = NaiveBayes.score(pool, col("doc_id"), col("text"),
+          nbModel, nbPriors)
+        .filter(col("pred") === keepLabel &&
+          col("margin").isNotNull && col("margin") >= minMargin)
+        .select("doc_id")
+      pool.join(admitted, Seq("doc_id"))
+    })
+
+  /** model_gate, trained form: the model and priors are trained ONCE
+    * on `labeled` (vocabulary/label-sized frames, broadcast by
+    * [[NaiveBayes.score]]) — Brown et al. 2020 §A2's shape: rule-gate
+    * first, a learned gate confirms. Trained when the stage runs, so a
+    * report releases the training cache with its boundaries. */
+  private def modelGate(labeled: DataFrame, labeledText: Column,
+                        label: Column, keepLabel: String, minMargin: Double,
+                        storage: StorageLevel): Stage =
+    Stage("model_gate", readsTwice = true, pool =>
+      modelGate(NaiveBayes.model(labeled, labeledText, label, storage),
+        NaiveBayes.priors(labeled, label), keepLabel, minMargin).op(pool))
+
+  /** dsir_select: keep the `k` pool docs a without-replacement
+    * ∝exp(weight) draw selects toward the model's target domain
+    * ([[Dsir.resampleWith]] — Xie et al. 2023's select-then-train
+    * step, deterministic Gumbel top-k); the k-row selection
+    * broadcasts back onto the pool. `dsirModel(pool)` is the
+    * importance model: trained on the pool in place, or frozen. */
+  private def dsirSelect(dsirModel: DataFrame => DataFrame, k: Int): Stage =
+    Stage("dsir_select", readsTwice = true, { pool =>
+      pool.join(broadcast(Dsir.resampleWith(dsirModel(pool), pool,
+        col("doc_id"), col("text"), k).select("doc_id")), Seq("doc_id"))
+    })
 
   /** Run the pipeline; returns the surviving doc ids.
     *
@@ -40,42 +166,9 @@ object LlmCuration {
   def run(docs: DataFrame, id: Column, text: Column,
           minQuality: Double = 0.5, lang: Option[String] = Some("en"),
           minJaccard: Double = 0.1,
-          storage: StorageLevel = Caching.Default): DataFrame = {
-    val kept = gateStage(docs, id, text, minQuality, lang)
-    // cached: feeds both the near-dup pair generation and the final
-    // left_anti — without it the gates + hash-dedup shuffle run twice
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    nearDupStage(uniq, minJaccard, storage).select("doc_id")
-  }
-
-  /** Stage 1: the map-only quality + language gate → (doc_id, text).
-    * Factored out so [[run]] and [[attritionReport]] cannot drift. */
-  private def gateStage(docs: DataFrame, id: Column, text: Column,
-                        minQuality: Double,
-                        lang: Option[String]): DataFrame = {
-    val base = docs.select(id.as("doc_id"), text.as("text"))
-    val scored = TextAnalysis.qualityFeatures(base, col("text"))
-      .withColumn("lang_pred", TextAnalysis.langId(col("text")))
-    lang.foldLeft(scored.filter(col("quality_score") >= minQuality)) {
-      (df, l) => df.filter(col("lang_pred") === l)
-    }.select("doc_id", "text")
-  }
-
-  /** Stage 2: exact dedup, min-id keeper per content hash. */
-  private def exactDedupStage(kept: DataFrame): DataFrame =
-    kept.groupBy(md5(col("text")).as("__h"))
-      .agg(min(col("doc_id")).as("doc_id"), first(col("text")).as("text"))
-      .select("doc_id", "text")
-
-  /** Stage 3: near-dup apply — survivors of the greedy MinHash-LSH
-    * drop, keeping (doc_id, text). */
-  private def nearDupStage(uniq: DataFrame, minJaccard: Double,
-                           storage: StorageLevel): DataFrame = {
-    val pairs = TextDedup.minHashLshPairs(uniq, col("doc_id"), col("text"),
-      minJaccard, storage)
-    uniq.join(pairs.select(col("doc_b").as("doc_id")).distinct(),
-      Seq("doc_id"), "left_anti")
-  }
+          storage: StorageLevel = Caching.Default): DataFrame =
+    pipeline(docs, core(id, text, minQuality, lang, minJaccard, storage),
+      storage).select("doc_id")
 
   /** Corpus report card — the per-source summary a data team reads
     * BEFORE choosing mixture weights (the decision input upstream of
@@ -116,112 +209,26 @@ object LlmCuration {
           col("n_docs").cast(DoubleType), 6))
   }
 
-  /** [[run]] plus the decontamination stage a training corpus runs
-    * LAST (stage 5): survivors sharing any word `n`-gram with the eval
-    * corpus are dropped ([[graft.dedup.Decontaminate.applyFilter]] —
-    * broadcast eval shingle set, map-only probe). Last because the
-    * probe then sees the smallest surviving corpus, and because eval
-    * membership must win over every retention decision: if the eval
-    * docs themselves ride in `docs` (the usual setup), they self-hit
-    * and drop here regardless of how curation ranked them.
-    *
-    * Lifecycle: the returned frame is lazy, so the persisted stage
-    * boundaries (uniq/surv) cannot be unpersisted here — the CALLER
-    * owns their lifecycle (the [[graft.Caching]] contract): pass
-    * `StorageLevel.NONE` to opt out in a long-lived session, or
-    * unpersist after the terminal action (the [[attritionReport]]
-    * family, which owns its actions, does exactly that). */
+  /** [[run]] plus the decontam stage (see [[decontam]]): gate →
+    * exact_dedup → near_dup → decontam. Returns the surviving ids;
+    * stored boundaries follow the [[pipeline]] lifecycle. */
   def runDecontaminated(docs: DataFrame, eval: DataFrame,
                         id: Column, text: Column,
                         minQuality: Double = 0.5,
                         lang: Option[String] = Some("en"),
                         minJaccard: Double = 0.1, n: Int = 5,
-                        storage: StorageLevel = Caching.Default): DataFrame = {
-    val kept = gateStage(docs, id, text, minQuality, lang)
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    // survivors carry their own (doc_id, text) — no join-back to the
-    // raw corpus; persisted because the decontaminate anti-join reads
-    // the frame twice (probe side + keep side)
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    graft.dedup.Decontaminate.applyFilter(surv, eval, "doc_id", col("text"), n)
-      .select("doc_id")
-  }
+                        storage: StorageLevel = Caching.Default): DataFrame =
+    pipeline(docs, core(id, text, minQuality, lang, minJaccard, storage) :+
+      decontam(eval, n), storage).select("doc_id")
 
-  /** Stage 4 (model gate): keep survivors the TRAINED classifier
-    * routes to `keepLabel` with margin >= `minMargin` — the
-    * production refinement of stage 1's heuristic gate (Brown et al.
-    * 2020 §A2's quality-classifier shape: rule-gate first, a learned
-    * gate confirms). The model and priors are trained ONCE on
-    * `labeled` (vocabulary/label-sized frames, broadcast by
-    * [[NaiveBayes.score]]); scoring the pool is map-only plus one
-    * (doc, label)-keyed in-batch aggregation. Docs the model has NO
-    * evidence for (all tokens out-of-vocabulary → no score row, or a
-    * null margin) drop: a selection gate admits on evidence, it does
-    * not pass on silence. Factored so [[runSelected]] and
-    * [[attritionReportSelected]] cannot drift. */
-  private def modelGateStage(pool: DataFrame, labeled: DataFrame,
-                             labeledText: Column, label: Column,
-                             keepLabel: String, minMargin: Double,
-                             storage: StorageLevel): DataFrame = {
-    val m = NaiveBayes.model(labeled, labeledText, label, storage)
-    val pri = NaiveBayes.priors(labeled, label)
-    modelGateApply(pool, m, pri, keepLabel, minMargin)
-  }
-
-  /** Stage 4 in its SERVING form: the model gate applied with a
-    * PRE-TRAINED (frozen) model + priors — the scoring half
-    * [[modelGateStage]] executes after training. Factored so the
-    * lifecycle form and the steady-state form cannot drift. */
-  private def modelGateApply(pool: DataFrame, nbModel: DataFrame,
-                             nbPriors: DataFrame, keepLabel: String,
-                             minMargin: Double): DataFrame = {
-    val admitted = NaiveBayes.score(pool, col("doc_id"), col("text"),
-        nbModel, nbPriors)
-      .filter(col("pred") === keepLabel &&
-        col("margin").isNotNull && col("margin") >= minMargin)
-      .select("doc_id")
-    pool.join(admitted, Seq("doc_id"))
-  }
-
-  /** Stage 5 (DSIR select): keep the `k` pool docs a without-
-    * replacement ∝exp(weight) draw selects toward `target`'s domain
-    * ([[Dsir.resample]] — Xie et al. 2023's select-then-train step,
-    * deterministic Gumbel top-k riding the bounded-heap rewrite).
-    * The k-row selection broadcasts back onto the pool. */
-  private def dsirSelectStage(pool: DataFrame, target: DataFrame,
-                              targetText: Column, k: Int): DataFrame =
-    pool.join(
-      broadcast(Dsir.resample(target.select(targetText.as("text")), pool,
-        col("doc_id"), col("text"), k).select("doc_id")),
-      Seq("doc_id"))
-
-  /** Stage 5 in its SERVING form: the DSIR draw under a PRE-BUILT
-    * (frozen) importance model — [[Dsir.resampleWith]] instead of the
-    * train-and-draw [[dsirSelectStage]]. Identical selection when the
-    * model was built from the same (target, pool) inputs. */
-  private def dsirSelectApply(pool: DataFrame, dsirModel: DataFrame,
-                              k: Int): DataFrame =
-    pool.join(
-      broadcast(Dsir.resampleWith(dsirModel, pool, col("doc_id"),
-        col("text"), k).select("doc_id")),
-      Seq("doc_id"))
-
-  /** [[runDecontaminated]] grown into the full SELECTION pipeline a
-    * training-data team actually ships (the brief's production shape):
-    * rule gate → exact dedup → near-dup → TRAINED model gate
-    * ([[modelGateStage]]) → DSIR importance selection
-    * ([[dsirSelectStage]]) → decontaminate. Decontamination stays
-    * LAST for [[runDecontaminated]]'s reason — eval membership must
-    * win over every retention decision, including the model's and the
-    * sampler's. Returns the selected, decontaminated doc ids.
+  /** The full SELECTION pipeline a training-data team ships: gate →
+    * exact_dedup → near_dup → TRAINED model_gate → DSIR dsir_select
+    * (model trained on the gated pool) → decontam. Returns the
+    * selected, decontaminated doc ids.
     *
     * Scale shape: every stage sees the smallest surviving corpus; the
     * model/priors and the DSIR bucket model are fixed-size broadcast
-    * frames, the k-row selection broadcasts back, and each stage
-    * boundary persists under `storage` so no stage's subtree
-    * re-executes across the chain's branches (caller-owned lifecycle —
-    * [[runDecontaminated]]'s note).
+    * frames and the k-row selection broadcasts back.
     *
     * @param labeled   labeled training docs for the model gate
     * @param target    target-domain docs for the DSIR weights
@@ -234,30 +241,38 @@ object LlmCuration {
                   k: Int,
                   minQuality: Double = 0.5, lang: Option[String] = Some("en"),
                   minJaccard: Double = 0.1, n: Int = 5,
-                  storage: StorageLevel = Caching.Default): DataFrame = {
-    val kept = gateStage(docs, id, text, minQuality, lang)
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    val gated = Caching.staged(
-      modelGateStage(surv, labeled, text, label, keepLabel, minMargin,
-        storage), storage)
-    val sel = Caching.staged(
-      dsirSelectStage(gated, target, text, k), storage)
-    graft.dedup.Decontaminate.applyFilter(sel, eval, "doc_id", col("text"), n)
-      .select("doc_id")
-  }
+                  storage: StorageLevel = Caching.Default): DataFrame =
+    pipeline(docs, selectedStages(eval, labeled, target, id, text, label,
+      keepLabel, minMargin, k, minQuality, lang, minJaccard, n, storage),
+      storage).select("doc_id")
+
+  private def selectedStages(eval: DataFrame, labeled: DataFrame, target: DataFrame,
+      id: Column, text: Column, label: Column, keepLabel: String, minMargin: Double,
+      k: Int, minQuality: Double, lang: Option[String], minJaccard: Double, n: Int,
+      storage: StorageLevel): Seq[Stage] =
+    core(id, text, minQuality, lang, minJaccard, storage) ++ Seq(
+      modelGate(labeled, text, label, keepLabel, minMargin, storage),
+      dsirSelect(Dsir.model(target.select(text.as("text")), _, col("text")), k),
+      decontam(eval, n))
+
+  private def servingStages(eval: DataFrame, nbModel: DataFrame, nbPriors: DataFrame,
+      dsirModel: DataFrame, id: Column, text: Column, keepLabel: String,
+      minMargin: Double, k: Int, minQuality: Double, lang: Option[String],
+      minJaccard: Double, n: Int, storage: StorageLevel): Seq[Stage] =
+    core(id, text, minQuality, lang, minJaccard, storage) ++ Seq(
+      modelGate(nbModel, nbPriors, keepLabel, minMargin),
+      dsirSelect(_ => dsirModel, k),
+      decontam(eval, n))
 
   /** The frozen artifacts [[runSelectedServing]] consumes — train ONCE
     * what [[runSelected]] re-trains per invocation: the NB (model,
     * priors) from `labeled`, and the DSIR importance model from
-    * (`target`, the model-gated pool) — the DSIR raw side is the pool
-    * the draw will score, so building it requires one pipeline pass
-    * through stage 4 (the build cost the steady-state leg amortizes).
-    * Returns (nbModel, nbPriors, dsirModel); all three are fixed-size
-    * broadcastable frames — persist AND materialize them before
-    * serving (the [[graft.streaming.SelectionPipelineStream]]
-    * contract: re-training any artifact is a new artifact). */
+    * (`target`, the model-gated pool), which takes one pipeline pass
+    * through model_gate. Returns (nbModel, nbPriors, dsirModel); all
+    * three are fixed-size broadcastable frames — persist AND
+    * materialize them before serving (the
+    * [[graft.streaming.SelectionPipelineStream]] contract:
+    * re-training any artifact is a new artifact). */
   def selectionArtifacts(docs: DataFrame, labeled: DataFrame,
                          target: DataFrame, id: Column, text: Column,
                          label: Column, keepLabel: String,
@@ -267,38 +282,25 @@ object LlmCuration {
                          minJaccard: Double = 0.1,
                          storage: StorageLevel = Caching.Default)
       : (DataFrame, DataFrame, DataFrame) = {
-    val m = NaiveBayes.model(labeled, text, label, storage)
-    val pri = NaiveBayes.priors(labeled, label)
-    val kept = gateStage(docs, id, text, minQuality, lang)
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    val gated = modelGateApply(surv, m, pri, keepLabel, minMargin)
-    val dsir = Dsir.model(target.select(text.as("text")), gated,
-      col("text"))
-    (m, pri, dsir)
+    val (m, pri) = (NaiveBayes.model(labeled, text, label, storage),
+      NaiveBayes.priors(labeled, label))
+    (m, pri, Dsir.model(target.select(text.as("text")), pipeline(docs,
+      core(id, text, minQuality, lang, minJaccard, storage) :+
+        modelGate(m, pri, keepLabel, minMargin), storage), col("text")))
   }
 
-  /** [[runSelected]]'s STEADY-STATE serving leg (the e6/e6b split for
-    * the selection pipeline): the same gate → exact dedup → near-dup →
-    * model gate → DSIR select → decontaminate chain, but the NB model/
-    * priors and the DSIR importance model arrive PRE-TRAINED
-    * ([[selectionArtifacts]]) instead of being rebuilt in-plan — the
-    * invocation only pays the per-corpus serving stages, which is the
-    * latency a selection service actually quotes (the batch twin of
-    * [[graft.streaming.SelectionPipelineStream]]'s frozen-artifact
-    * contract).
+  /** [[runSelected]]'s STEADY-STATE serving leg: the same stage list,
+    * but the NB model/priors and the DSIR importance model arrive
+    * PRE-TRAINED ([[selectionArtifacts]]), so the invocation only pays
+    * the per-corpus serving stages — the latency a selection service
+    * quotes (the batch twin of
+    * [[graft.streaming.SelectionPipelineStream]]).
     *
     * Output is IDENTICAL to [[runSelected]] when the artifacts were
     * built by [[selectionArtifacts]] from the same inputs: the NB
     * model depends only on `labeled`, the DSIR model only on
-    * (`target`, the stage-4 pool), and both pipelines apply the same
-    * factored stage functions — so the Gumbel top-k draw replays
-    * bit-identically (no threshold approximation; the streaming form's
-    * documented Gumbel-vs-threshold deviation does not apply here).
-    *
-    * Lifecycle: persisted stage boundaries follow
-    * [[runDecontaminated]]'s caller-owns contract. */
+    * (`target`, the model_gate pool), and the Gumbel top-k draw
+    * replays bit-identically. */
   def runSelectedServing(docs: DataFrame, eval: DataFrame,
                          nbModel: DataFrame, nbPriors: DataFrame,
                          dsirModel: DataFrame,
@@ -307,25 +309,14 @@ object LlmCuration {
                          minQuality: Double = 0.5,
                          lang: Option[String] = Some("en"),
                          minJaccard: Double = 0.1, n: Int = 5,
-                         storage: StorageLevel = Caching.Default): DataFrame = {
-    val kept = gateStage(docs, id, text, minQuality, lang)
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    val gated = Caching.staged(
-      modelGateApply(surv, nbModel, nbPriors, keepLabel, minMargin),
-      storage)
-    val sel = Caching.staged(
-      dsirSelectApply(gated, dsirModel, k), storage)
-    graft.dedup.Decontaminate.applyFilter(sel, eval, "doc_id", col("text"), n)
-      .select("doc_id")
-  }
+                         storage: StorageLevel = Caching.Default): DataFrame =
+    pipeline(docs, servingStages(eval, nbModel, nbPriors, dsirModel, id,
+      text, keepLabel, minMargin, k, minQuality, lang, minJaccard, n,
+      storage), storage).select("doc_id")
 
-  /** [[attritionReportSelected]]'s steady-state twin: the same
-    * per-stage ops log over [[runSelectedServing]]'s chain (frozen
-    * artifacts, serving stages only). Stage rows are identical to the
-    * lifecycle report's when the artifacts came from
-    * [[selectionArtifacts]] on the same inputs. */
+  /** [[runSelectedServing]]'s stage list as the per-stage ops log.
+    * Rows equal [[attritionReportSelected]]'s when the artifacts came
+    * from [[selectionArtifacts]] on the same inputs. */
   def attritionReportServing(docs: DataFrame, eval: DataFrame,
                              nbModel: DataFrame, nbPriors: DataFrame,
                              dsirModel: DataFrame,
@@ -334,47 +325,14 @@ object LlmCuration {
                              minQuality: Double = 0.5,
                              lang: Option[String] = Some("en"),
                              minJaccard: Double = 0.1, n: Int = 5,
-                             storage: StorageLevel = Caching.Default): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val nAll = docs.count()
-    val kept = Caching.staged(
-      gateStage(docs, id, text, minQuality, lang), storage)
-    val nKept = kept.count()
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    val nUniq = uniq.count()
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    val nSurv = surv.count()
-    val gated = Caching.staged(
-      modelGateApply(surv, nbModel, nbPriors, keepLabel, minMargin),
-      storage)
-    val nGated = gated.count()
-    val sel = Caching.staged(
-      dsirSelectApply(gated, dsirModel, k), storage)
-    val nSel = sel.count()
-    val clean = graft.dedup.Decontaminate.applyFilter(
-      sel, eval, "doc_id", col("text"), n)
-    val nClean = clean.count()
-    Seq(kept, uniq, surv, gated, sel).foreach(_.unpersist())
-    Seq((1, "gate", nAll, nKept),
-        (2, "exact_dedup", nKept, nUniq),
-        (3, "near_dup", nUniq, nSurv),
-        (4, "model_gate", nSurv, nGated),
-        (5, "dsir_select", nGated, nSel),
-        (6, "decontam", nSel, nClean))
-      .toDF("stage_no", "stage", "n_in", "n_out")
-      .withColumn("drop_frac", when(col("n_in") === 0, lit(null))
-        .otherwise(graft.functions.Quantize.qdp(lit(1.0) -
-          col("n_out").cast("double") / col("n_in").cast("double"), 6)))
-  }
+                             storage: StorageLevel = Caching.Default): DataFrame =
+    report(docs, servingStages(eval, nbModel, nbPriors, dsirModel, id,
+      text, keepLabel, minMargin, k, minQuality, lang, minJaccard, n,
+      storage), storage)
 
-  /** Per-stage attrition rows over [[runSelected]]'s chain — c5's
-    * ops-log discipline extended to the selection stages (a model
+  /** [[runSelected]]'s stage list as the per-stage ops log (a model
     * gate suddenly eating 60% is a drifted model or a drifted feed;
-    * dsir_select's n_out is k by construction unless the pool fell
-    * below k — both worth alarming on). Same factored stage
-    * functions; report and pipeline cannot drift. */
+    * dsir_select's n_out is k unless the pool fell below k). */
   def attritionReportSelected(docs: DataFrame, eval: DataFrame,
                               labeled: DataFrame, target: DataFrame,
                               id: Column, text: Column, label: Column,
@@ -382,55 +340,18 @@ object LlmCuration {
                               minQuality: Double = 0.5,
                               lang: Option[String] = Some("en"),
                               minJaccard: Double = 0.1, n: Int = 5,
-                              storage: StorageLevel = Caching.Default): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val nAll = docs.count()
-    val kept = Caching.staged(
-      gateStage(docs, id, text, minQuality, lang), storage)
-    val nKept = kept.count()
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    val nUniq = uniq.count()
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    val nSurv = surv.count()
-    val gated = Caching.staged(
-      modelGateStage(surv, labeled, text, label, keepLabel, minMargin,
-        storage), storage)
-    val nGated = gated.count()
-    val sel = Caching.staged(
-      dsirSelectStage(gated, target, text, k), storage)
-    val nSel = sel.count()
-    val clean = graft.dedup.Decontaminate.applyFilter(
-      sel, eval, "doc_id", col("text"), n)
-    val nClean = clean.count()
-    Seq(kept, uniq, surv, gated, sel).foreach(_.unpersist())
-    Seq((1, "gate", nAll, nKept),
-        (2, "exact_dedup", nKept, nUniq),
-        (3, "near_dup", nUniq, nSurv),
-        (4, "model_gate", nSurv, nGated),
-        (5, "dsir_select", nGated, nSel),
-        (6, "decontam", nSel, nClean))
-      .toDF("stage_no", "stage", "n_in", "n_out")
-      // null, not 0/0, when an upstream stage emptied the corpus (a
-      // fully-draining model gate is a legal, alarm-worthy outcome)
-      .withColumn("drop_frac", when(col("n_in") === 0, lit(null))
-        .otherwise(graft.functions.Quantize.qdp(lit(1.0) -
-          col("n_out").cast("double") / col("n_in").cast("double"), 6)))
-  }
+                              storage: StorageLevel = Caching.Default): DataFrame =
+    report(docs, selectedStages(eval, labeled, target, id, text, label,
+      keepLabel, minMargin, k, minQuality, lang, minJaccard, n, storage),
+      storage)
 
-  /** The crawl front door's ops log — c3's raw-markup chain with the
-    * d20 URL/domain blocklist gate composed as STAGE 0 (the
-    * RefinedWeb/UT1 order: a blocked domain kills the page before any
-    * text is extracted, so every downstream stage sees a smaller
-    * corpus): url_gate → extract (docs whose boilerplate-stripped
-    * extraction is empty drop — a nav-and-footer-only page carries no
-    * trainable text) → quality/language gate → exact dedup → near-dup.
-    * Same per-stage persisted-count discipline as [[attritionReport]];
-    * the stages are the library operators themselves
-    * ([[graft.text.Urls.blocklistGate]], [[graft.text.Html.extract]],
-    * [[gateStage]]/[[exactDedupStage]]/[[nearDupStage]]) so report and
-    * pipeline cannot drift. */
+  /** The crawl front door's ops log: url_gate → extract → gate →
+    * exact_dedup → near_dup over (doc_id, url, html) pages. url_gate
+    * is the d20 domain/pattern blocklist ([[graft.text.Urls.blocklistGate]])
+    * — the RefinedWeb/UT1 order: a blocked domain kills the page
+    * before any text is extracted; extract drops pages whose
+    * boilerplate-stripped text ([[graft.text.Html.extract]]) is empty
+    * (a nav-and-footer-only page carries no trainable text). */
   def attritionReportCrawl(pages: DataFrame, id: Column, url: Column,
                            html: Column,
                            blockedDomains: Seq[String],
@@ -438,86 +359,29 @@ object LlmCuration {
                            minQuality: Double = 0.5,
                            lang: Option[String] = Some("en"),
                            minJaccard: Double = 0.1,
-                           storage: StorageLevel = Caching.Default): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val base = pages.select(id.as("doc_id"), url.as("url"), html.as("html"))
-    val nAll = base.count()
-    val verdict = graft.text.Urls.blocklistGate(base, col("doc_id"),
-      col("url"), blockedDomains, patternRules)
-    val allowed = Caching.staged(
-      base.join(verdict.filter(col("allowed")).select("doc_id"),
-        Seq("doc_id")), storage)
-    val nAllowed = allowed.count()
-    val extracted = Caching.staged(
-      graft.text.Html.extract(allowed, col("doc_id"), col("html"))
-        .select(col("doc_id"), col("extracted").as("text"))
-        .filter(length(col("text")) > 0), storage)
-    val nExtracted = extracted.count()
-    val kept = Caching.staged(
-      gateStage(extracted, col("doc_id"), col("text"), minQuality, lang),
+                           storage: StorageLevel = Caching.Default): DataFrame =
+    report(pages.select(id.as("doc_id"), url.as("url"), html.as("html")), Seq(
+      Stage("url_gate", readsTwice = true, base =>
+        base.join(graft.text.Urls.blocklistGate(base, col("doc_id"),
+          col("url"), blockedDomains, patternRules)
+          .filter(col("allowed")).select("doc_id"), Seq("doc_id"))),
+      Stage("extract", readsTwice = false,
+        graft.text.Html.extract(_, col("doc_id"), col("html"))
+          .select(col("doc_id"), col("extracted").as("text"))
+          .filter(length(col("text")) > 0))) ++
+      core(col("doc_id"), col("text"), minQuality, lang, minJaccard, storage),
       storage)
-    val nKept = kept.count()
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    val nUniq = uniq.count()
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    val nSurv = surv.count()
-    Seq(allowed, extracted, kept, uniq, surv).foreach(_.unpersist())
-    Seq((1, "url_gate", nAll, nAllowed),
-        (2, "extract", nAllowed, nExtracted),
-        (3, "gate", nExtracted, nKept),
-        (4, "exact_dedup", nKept, nUniq),
-        (5, "near_dup", nUniq, nSurv))
-      .toDF("stage_no", "stage", "n_in", "n_out")
-      .withColumn("drop_frac", when(col("n_in") === 0, lit(null))
-        .otherwise(graft.functions.Quantize.qdp(lit(1.0) -
-          col("n_out").cast("double") / col("n_in").cast("double"), 6)))
-  }
 
-  /** Per-stage attrition report over [[runDecontaminated]]'s chain —
-    * the ops log every curation run emits (HOW MUCH did each stage
-    * drop; a gate suddenly eating 40% instead of 4% is a feed
-    * regression, a near-dup stage dropping ~0% says the corpus was
-    * already deduped upstream): one row per stage with rows in / rows
-    * out / drop fraction, stages the EXACT same factored functions
-    * [[run]] executes ([[gateStage]]/[[exactDedupStage]]/
-    * [[nearDupStage]] — report and pipeline cannot drift).
-    *
-    * The four counts are control-plane one-row aggregates (the
-    * [[Medallion.run]] metrics pattern); each intermediate is
-    * persisted so a stage's corpus is computed once and fed to both
-    * its count and the next stage. drop_frac is one IEEE division of
-    * exact longs, rounded 6 dp. */
+  /** [[runDecontaminated]]'s stage list as the per-stage ops log every
+    * curation run emits (a gate suddenly eating 40% instead of 4% is a
+    * feed regression; a near-dup stage dropping ~0% says the corpus
+    * was already deduped upstream). */
   def attritionReport(docs: DataFrame, eval: DataFrame,
                       id: Column, text: Column,
                       minQuality: Double = 0.5,
                       lang: Option[String] = Some("en"),
                       minJaccard: Double = 0.1, n: Int = 5,
-                      storage: StorageLevel = Caching.Default): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val nAll = docs.count()
-    val kept = Caching.staged(
-      gateStage(docs, id, text, minQuality, lang), storage)
-    val nKept = kept.count()
-    val uniq = Caching.staged(exactDedupStage(kept), storage)
-    val nUniq = uniq.count()
-    val surv = Caching.staged(
-      nearDupStage(uniq, minJaccard, storage), storage)
-    val nSurv = surv.count()
-    val clean = graft.dedup.Decontaminate.applyFilter(
-      surv, eval, "doc_id", col("text"), n)
-    val nClean = clean.count()
-    Seq(kept, uniq, surv).foreach(_.unpersist())
-    Seq((1, "gate", nAll, nKept),
-        (2, "exact_dedup", nKept, nUniq),
-        (3, "near_dup", nUniq, nSurv),
-        (4, "decontam", nSurv, nClean))
-      .toDF("stage_no", "stage", "n_in", "n_out")
-      // §6 quantizer (Quantize scaladoc): engine-identical at the
-      // half boundary, unlike round(double, n)
-      .withColumn("drop_frac", graft.functions.Quantize.qdp(lit(1.0) -
-        col("n_out").cast("double") / col("n_in").cast("double"), 6))
-  }
+                      storage: StorageLevel = Caching.Default): DataFrame =
+    report(docs, core(id, text, minQuality, lang, minJaccard, storage) :+
+      decontam(eval, n), storage)
 }

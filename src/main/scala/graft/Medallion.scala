@@ -78,26 +78,16 @@ object Medallion {
       "set (or export GRAFT_WORK_DIR) before running the pipeline")
     import spark.implicits._
     val wmPath = s"$workDir/watermark.json"
-    val wm = Watermark.read(wmPath)
 
     // 1. incremental slice of the feed (cached: consumed by the bronze
     // chain AND the stats pass below — without it each action re-reads
     // and re-filters the feed)
-    val feed = Tables.load(spark, sfDir, "orders")
-    val fresh = Watermark.newerThan(feed, col("o_orderdate"), wm).cache()
+    val fresh = freshSlice(spark, sfDir, wmPath).cache()
 
     // 2. Bronze: latest per claim, DQ gate, MERGE clean. The flagged
     // frame is cached so the clean/quarantined splits and the metric
     // counts all reuse one materialization of the dedup shuffle.
-    val latest = Dedup.latestByKeyAgg(fresh, Seq("o_orderkey"),
-      struct(col("o_orderdate"), col("o_totalprice")))
-    val rules = Seq(
-      QualityRules.Rule(col("o_totalprice") <= 0, "NonPositiveAmount"),
-      QualityRules.Rule(!col("o_orderstatus").isin(validStatuses: _*),
-        "UnknownStatus"))
-    val flagged = QualityRules.withReasons(latest, rules).cache()
-    val clean = flagged
-      .filter(length(col(QualityRules.ReasonCol)) === 0).drop(QualityRules.ReasonCol)
+    val flagged = flaggedLatest(fresh, validStatuses).cache()
 
     // The run-metric aggregates are read-only probes of the cached
     // slices and the customer dim — independent of the store chain, so
@@ -111,9 +101,7 @@ object Medallion {
     val dim = Dimensions.extract(
       Tables.load(spark, sfDir, "customer"),
       Seq("c_custkey", "c_name", "c_mktsegment"))
-    val fFresh = scala.concurrent.Future(fresh
-      .agg(count(lit(1)).as("n"), max(col("o_orderdate")).as("mx"))
-      .collect()(0))(ec)
+    val fFresh = scala.concurrent.Future(sliceStats(fresh))(ec)
     val fDq = scala.concurrent.Future(flagged.agg(
       sum(when(length(col(QualityRules.ReasonCol)) === 0, 1L).otherwise(0L)),
       sum(when(length(col(QualityRules.ReasonCol)) > 0, 1L).otherwise(0L)))
@@ -121,17 +109,12 @@ object Medallion {
     val fDim = scala.concurrent.Future(dim.count())(ec)
 
     try {
-      SnapshotStore.mergeInto(clean, s"$workDir/bronze", Seq("o_orderkey"))
+      SnapshotStore.mergeInto(cleanOf(flagged), s"$workDir/bronze", Seq("o_orderkey"))
 
       // 3. Silver: pseudonymized fact + patient dim
-      val bronze = SnapshotStore.read(spark, s"$workDir/bronze").get
-      val fact = bronze.select(
-        col("o_orderkey").as("claim_id"),
-        Pii.saltedSha256(col("o_custkey"), salt).as("patient_key"),
-        col("o_totalprice").as("amount"),
-        col("o_orderdate").as("claim_date"),
-        col("o_orderstatus").as("status"))
-      SnapshotStore.mergeInto(fact, s"$workDir/fact", Seq("claim_id"))
+      SnapshotStore.mergeInto(
+        factOf(SnapshotStore.read(spark, s"$workDir/bronze").get, salt),
+        s"$workDir/fact", Seq("claim_id"))
 
       // 4. Gold: measure rollup snapshot off the merged fact. The
       // fact-store count reads the version the merge just committed —
@@ -139,9 +122,7 @@ object Medallion {
       // (both read-only against committed files).
       val mergedFact = SnapshotStore.read(spark, s"$workDir/fact").get
       val fFact = scala.concurrent.Future(mergedFact.count())(ec)
-      val gold = mergedFact.groupBy(col("status"))
-        .agg(count(lit(1)).as("n_claims"),
-          Measures.decSum(col("amount")).as("total_amount"))
+      val gold = goldOf(mergedFact)
       SnapshotStore.commit(gold, s"$workDir/gold")
 
       // 5. advance watermark; emit run metrics (joining the concurrent
@@ -150,16 +131,10 @@ object Medallion {
       import scala.concurrent.Await
       import scala.concurrent.duration.Duration
       val freshStats = Await.result(fFresh, Duration.Inf)
-      val freshRows = freshStats.getLong(0)
-      freshStats.get(1) match {
-        case t: java.sql.Timestamp => Watermark.write(wmPath, t.toInstant)
-        case d: java.time.LocalDateTime => // TIMESTAMP_NTZ read as UTC wall time
-          Watermark.write(wmPath, d.toInstant(java.time.ZoneOffset.UTC))
-        case _ => // empty increment: leave the watermark untouched
-      }
+      advanceWatermark(wmPath, freshStats)
       val dqStats = Await.result(fDq, Duration.Inf)
       val metrics = Seq(
-        ("fresh_rows", freshRows),
+        ("fresh_rows", freshStats.getLong(0)),
         ("clean_rows", if (dqStats.isNullAt(0)) 0L else dqStats.getLong(0)),
         ("quarantined_rows", if (dqStats.isNullAt(1)) 0L else dqStats.getLong(1)),
         ("fact_rows", Await.result(fFact, Duration.Inf)),
@@ -171,6 +146,60 @@ object Medallion {
       metrics
     } finally pool.shutdown(): Unit
   }
+
+  // The stages [[run]] and [[runResilient]] share, each defined once.
+
+  /** The orders feed past the watermark stored at `wmPath`. */
+  private def freshSlice(spark: SparkSession, sfDir: String,
+                         wmPath: String): DataFrame =
+    Watermark.newerThan(Tables.load(spark, sfDir, "orders"),
+      col("o_orderdate"), Watermark.read(wmPath))
+
+  /** Latest row per claim, tagged with its DQ rule violations. */
+  private def flaggedLatest(fresh: DataFrame,
+                            validStatuses: Seq[String]): DataFrame =
+    QualityRules.withReasons(
+      Dedup.latestByKeyAgg(fresh, Seq("o_orderkey"),
+        struct(col("o_orderdate"), col("o_totalprice"))),
+      Seq(QualityRules.Rule(col("o_totalprice") <= 0, "NonPositiveAmount"),
+        QualityRules.Rule(!col("o_orderstatus").isin(validStatuses: _*),
+          "UnknownStatus")))
+
+  /** The flagged rows that broke no rule, without the reason column. */
+  private def cleanOf(flagged: DataFrame): DataFrame =
+    flagged.filter(length(col(QualityRules.ReasonCol)) === 0)
+      .drop(QualityRules.ReasonCol)
+
+  /** Silver: the pseudonymized claims fact. */
+  private def factOf(bronze: DataFrame, salt: String): DataFrame =
+    bronze.select(
+      col("o_orderkey").as("claim_id"),
+      Pii.saltedSha256(col("o_custkey"), salt).as("patient_key"),
+      col("o_totalprice").as("amount"),
+      col("o_orderdate").as("claim_date"),
+      col("o_orderstatus").as("status"))
+
+  /** Gold: the per-status measure rollup. */
+  private def goldOf(fact: DataFrame): DataFrame =
+    fact.groupBy(col("status"))
+      .agg(count(lit(1)).as("n_claims"),
+        Measures.decSum(col("amount")).as("total_amount"))
+
+  /** (row count, max claim date) of a slice. */
+  private def sliceStats(fresh: DataFrame): org.apache.spark.sql.Row =
+    fresh.agg(count(lit(1)).as("n"), max(col("o_orderdate")).as("mx"))
+      .collect()(0)
+
+  /** Move the watermark to `stats`' max claim date; an empty increment
+    * (null max) leaves it untouched. */
+  private def advanceWatermark(wmPath: String,
+                               stats: org.apache.spark.sql.Row): Unit =
+    stats.get(1) match {
+      case t: java.sql.Timestamp => Watermark.write(wmPath, t.toInstant)
+      case d: java.time.LocalDateTime => // TIMESTAMP_NTZ read as UTC wall time
+        Watermark.write(wmPath, d.toInstant(java.time.ZoneOffset.UTC))
+      case _ =>
+    }
 
   /** [[run]]'s chain expressed through [[operators.PipelineRunner]] —
     * the retry/failure-isolation posture of the reference's master
@@ -189,53 +218,29 @@ object Medallion {
                    salt: String = Salt,
                    validStatuses: Seq[String] = DefaultStatuses): DataFrame = {
     val wmPath = s"$workDir/watermark.json"
-    def fresh = Watermark.newerThan(Tables.load(spark, sfDir, "orders"),
-      col("o_orderdate"), Watermark.read(wmPath))
     PipelineRunner.run(spark, runId, Seq(
       PipelineStage("bronze", maxAttempts) { () =>
-        val latest = Dedup.latestByKeyAgg(fresh, Seq("o_orderkey"),
-          struct(col("o_orderdate"), col("o_totalprice")))
-        val rules = Seq(
-          QualityRules.Rule(col("o_totalprice") <= 0, "NonPositiveAmount"),
-          QualityRules.Rule(!col("o_orderstatus").isin(validStatuses: _*),
-            "UnknownStatus"))
-        val clean = QualityRules.withReasons(latest, rules)
-          .filter(length(col(QualityRules.ReasonCol)) === 0)
-          .drop(QualityRules.ReasonCol)
-        SnapshotStore.mergeInto(clean, s"$workDir/bronze", Seq("o_orderkey"))
+        SnapshotStore.mergeInto(
+          cleanOf(flaggedLatest(freshSlice(spark, sfDir, wmPath), validStatuses)),
+          s"$workDir/bronze", Seq("o_orderkey"))
         SnapshotStore.read(spark, s"$workDir/bronze").get.count()
       },
       PipelineStage("silver", maxAttempts) { () =>
-        val bronze = SnapshotStore.read(spark, s"$workDir/bronze").get
-        val fact = bronze.select(
-          col("o_orderkey").as("claim_id"),
-          Pii.saltedSha256(col("o_custkey"), salt).as("patient_key"),
-          col("o_totalprice").as("amount"),
-          col("o_orderdate").as("claim_date"),
-          col("o_orderstatus").as("status"))
-        SnapshotStore.mergeInto(fact, s"$workDir/fact", Seq("claim_id"))
+        SnapshotStore.mergeInto(
+          factOf(SnapshotStore.read(spark, s"$workDir/bronze").get, salt),
+          s"$workDir/fact", Seq("claim_id"))
         SnapshotStore.read(spark, s"$workDir/fact").get.count()
       },
       PipelineStage("gold", maxAttempts) { () =>
-        val fact = SnapshotStore.read(spark, s"$workDir/fact").get
-        val gold = fact.groupBy(col("status"))
-          .agg(count(lit(1)).as("n_claims"),
-            Measures.decSum(col("amount")).as("total_amount"))
-        SnapshotStore.commit(gold, s"$workDir/gold")
+        SnapshotStore.commit(goldOf(SnapshotStore.read(spark, s"$workDir/fact").get),
+          s"$workDir/gold")
         SnapshotStore.read(spark, s"$workDir/gold").get.count()
       },
       // LAST, deliberately: a failure anywhere above leaves the
       // watermark untouched and the slice replayable
       PipelineStage("advance_watermark", maxAttempts) { () =>
-        val st = fresh
-          .agg(count(lit(1)).as("n"), max(col("o_orderdate")).as("mx"))
-          .collect()(0)
-        st.get(1) match {
-          case t: java.sql.Timestamp => Watermark.write(wmPath, t.toInstant)
-          case d: java.time.LocalDateTime =>
-            Watermark.write(wmPath, d.toInstant(java.time.ZoneOffset.UTC))
-          case _ => // empty increment: leave the watermark untouched
-        }
+        val st = sliceStats(freshSlice(spark, sfDir, wmPath))
+        advanceWatermark(wmPath, st)
         st.getLong(0)
       }))
   }

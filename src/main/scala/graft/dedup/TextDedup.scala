@@ -590,9 +590,10 @@ object TextDedup {
     * key so stopped test sessions aren't pinned). Every probe and
     * every reband resolves the plan, so a retune key paid 3+ one-row
     * `head()` jobs per invocation for values that cannot change.
-    * Invalidation: only [[dropDedupIndexBucketed]] can make a
-    * (name, version) recur with different content — it clears the
-    * name's entries. */
+    * Only plans read from an existing plan table enter the memo (an
+    * absent version's default is never pinned). Invalidation: only
+    * [[dropDedupIndexBucketed]] can make a (name, version) recur with
+    * different content — it clears the name's entries. */
   private val planMemo =
     new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
       scala.collection.concurrent.TrieMap[(String, Int), (Int, Int)]]()
@@ -650,11 +651,15 @@ object TextDedup {
       }
       m
     }
-    perSession.getOrElseUpdate((name, v),
+    // only a plan read from an existing table is memoized: a version
+    // queried before it is committed (or after retention dropped it)
+    // reads the default without pinning it for the session
+    perSession.get((name, v)).getOrElse {
       if (spark.catalog.tableExists(s"${name}_plan_v$v")) {
         val r = BucketedStore.table(spark, name, "plan", v).head()
-        (r.getInt(0), r.getInt(1))
-      } else (Bands, RowsPerBand))
+        perSession.getOrElseUpdate((name, v), (r.getInt(0), r.getInt(1)))
+      } else (Bands, RowsPerBand)
+    }
   }
 
   /** Build and commit the full BUCKETED dedup index for `docs` as
@@ -757,12 +762,20 @@ object TextDedup {
                                buckets: Int = 32): Int = {
     val v = currentBucketedVersion(spark, name).getOrElse(
       throw new IllegalStateException(s"no bucketed dedup index named $name"))
-    // IDEMPOTENT: a reband to the already-committed plan would write a
+    // IDEMPOTENT: a reband to the already-committed plan, with the
+    // bands member already bucketed as requested, would write a
     // byte-identical version (bands is a pure function of the stored
     // signatures and the plan) — return the current version instead of
-    // churning one. Retune flows reset the index to a known plan every
+    // churning one. A changed `buckets` alone is a real reband. Retune flows reset the index to a known plan every
     // run; in steady state that reset is this no-op.
-    if (committedPlan(spark, name, v) == ((bands, rowsPerBand))) return v
+    def bandsBucketedAs(w: Int): Boolean = {
+      val pb = BucketedStore.backingVersion(spark, name, "bands", w)
+      spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_bands_v$pb"))
+        .bucketSpec.exists(_.numBuckets == buckets)
+    }
+    if (committedPlan(spark, name, v) == ((bands, rowsPerBand)) &&
+        bandsBucketedAs(v)) return v
     // docs CARRIES (content-identical across a reband): only bands —
     // map-only from the stored signatures — and the one-row plan are
     // written, which is what "no re-shingling, no corpus text scan,
@@ -780,12 +793,7 @@ object TextDedup {
       committedPlan(spark, name, w) == ((bands, rowsPerBand)) &&
         spark.catalog.tableExists(s"${name}_docs_v$w") &&
         BucketedStore.backingVersion(spark, name, "docs", w) == docsBacking &&
-        spark.catalog.tableExists(s"${name}_bands_v$w") && {
-          val pb = BucketedStore.backingVersion(spark, name, "bands", w)
-          spark.sessionState.catalog.getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_bands_v$pb"))
-            .bucketSpec.exists(_.numBuckets == buckets)
-        }
+        spark.catalog.tableExists(s"${name}_bands_v$w") && bandsBucketedAs(w)
     }
     commitBucketed(BucketedStore.table(spark, name, "docs", v),
       name, buckets, bands, rowsPerBand, carryDocsFrom = Some(v),

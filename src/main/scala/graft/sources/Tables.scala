@@ -28,30 +28,43 @@ object Tables {
     * pays a full plan→RDD conversion to count splits — all driver-side
     * METADATA work, re-paid by every query invocation (most queries
     * load 1-3 tables; the fleet pays it thousands of times per run).
-    * The loaded DataFrame is an immutable lazy plan over an immutable
-    * input layout, so reusing it is pure metadata reuse — no data or
-    * results are cached (every action still computes from the parquet
-    * bytes; `clearCache()` is unaffected because nothing here enters
-    * the block manager). Keyed WEAKLY on the session (test suites
-    * create and stop many sessions; a stopped session's plans must not
-    * pin its state) and strongly on (dir, name) within it. */
+    * A memoized plan is reused only while the table path's file
+    * listing (names, sizes, modification times — one `listStatus`) is
+    * unchanged: an append, rewrite or delete under the path makes the
+    * next load re-read it, so a long-lived session (a scheduler loop
+    * over a growing feed) sees new files. No data or results are
+    * cached (every action still computes from the parquet bytes;
+    * `clearCache()` is unaffected because nothing here enters the
+    * block manager). Keyed WEAKLY on the session (test suites create
+    * and stop many sessions; a stopped session's plans must not pin
+    * its state) and strongly on (dir, name) within it. */
+  private type Listing = Seq[(String, Long, Long)]
   private val planMemo =
     new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[(String, String), DataFrame]]()
+      scala.collection.concurrent.TrieMap[(String, String), (Listing, DataFrame)]]()
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val perSession = planMemo.synchronized {
       var m = planMemo.get(spark)
       if (m == null) {
-        m = new scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
+        m = new scala.collection.concurrent.TrieMap[(String, String), (Listing, DataFrame)]()
         planMemo.put(spark, m)
       }
       m
     }
-    perSession.getOrElseUpdate((sfDir, name), {
-      val df = spark.read.parquet(s"$sfDir/$name.parquet")
-      if (computeHeavy(name)) spread(spark, df) else df
-    })
+    val path = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
+    // a missing path lists as empty; the read below then raises
+    // Spark's own not-found error
+    val listing: Listing = scala.util.Try(
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(path)
+        .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).toSeq.sorted)
+      .getOrElse(Nil)
+    perSession.get((sfDir, name)).collect { case (`listing`, df) => df }.getOrElse {
+      val raw = spark.read.parquet(path.toString)
+      val df = if (computeHeavy(name)) spread(spark, raw) else raw
+      perSession.put((sfDir, name), (listing, df))
+      df
+    }
   }
 
   /** Spread a scan across the session's cores when the file layout

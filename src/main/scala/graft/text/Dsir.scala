@@ -25,10 +25,10 @@ import graft.functions.Hashing
   * present, so scoring never misses and side totals are exact window
   * sums over the bucket-sized frame — no one-row attach, no corpus
   * re-execution). Scoring is map-only against the BROADCAST model
-  * plus one doc-keyed aggregation. The resample's global top-k is the
-  * naive rn<=k window that [[graft.plans.WindowTopOneRewrite]] ships
-  * as bounded-heap partial aggregation — no corpus sort, no single
-  * partition.
+  * plus one doc-keyed aggregation. The resample's global top-k is
+  * Spark's TakeOrderedAndProject (orderBy + limit): a bounded heap per
+  * partition and one k-row merge — no corpus sort, no single-partition
+  * window, with or without the optional plan rewrites.
   *
   * Determinism: log-probs round to 9 dp at the model (absorbing libm
   * ulp differences), per-doc sums ride DECIMAL(28,12), doubles are
@@ -155,8 +155,7 @@ object Dsir {
   /** Without-replacement sample of `k` raw docs with probability
     * ∝ exp(weight) — Gumbel top-k (Vieira 2014): rank by
     * weight + Gumbel(doc_id) and keep the k largest (exact-decimal
-    * order, doc_id tiebreak). The rn<=k window rides
-    * WindowTopOneRewrite's bounded-heap path. Output:
+    * order, doc_id tiebreak) through TakeOrderedAndProject. Output:
     * (doc_id, weight, skey). */
   def resample(target: DataFrame, raw: DataFrame, id: Column,
                text: Column, k: Int, buckets: Int = DefaultBuckets,
@@ -178,9 +177,9 @@ object Dsir {
     val w = scoreDec(raw, id, text, m, buckets, ngrams)
       .withColumn("s_dec",
         col("w_dec") + gumbel(col("doc_id")).cast("decimal(28,12)"))
-    val rn = row_number().over(
-      Window.orderBy(col("s_dec").desc, col("doc_id")))
-    w.withColumn("rn", rn).filter(col("rn") <= k)
+    // Sort + Limit plans as TakeOrderedAndProject: a bounded top-k per
+    // partition, then one k-row merge — scale-safe without any rewrite
+    w.orderBy(col("s_dec").desc, col("doc_id")).limit(k)
       .select(col("doc_id"),
         round(col("w_dec"), 6).cast("double").as("weight"),
         round(col("s_dec"), 6).cast("double").as("skey"))

@@ -3,6 +3,8 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.CachedRDDBuilder
 
 /** Bridge into Spark's `private[sql]` Column↔Expression conversions so
   * graft can expose custom Catalyst expressions (e.g.
@@ -28,4 +30,41 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `df`, which must already be persisted, as a Dataset whose whole
+    * logical plan is one `LogicalRDD` leaf reading its cache entry's
+    * blocks. Plans built over it never re-analyze the upstream tree,
+    * and — unlike an `InMemoryRelation` leaf, which carries the cached
+    * physical plan as a display child, so every explain string, plan
+    * info and AQE update of a deep chain re-renders each upstream
+    * stage once per reference (exponential in stage depth) — the leaf
+    * renders as one line. The leaf is memoized per cache entry, so
+    * two cuts of one entry are the same relation and plans over them
+    * still match each other in the CacheManager. Entries whose cache
+    * entry is gone are dropped from the memo on the next call. */
+  def cachedLeaf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val d = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val s = d.sparkSession
+    val cm = s.sharedState.cacheManager
+    def live(b: CachedRDDBuilder) = cm.lookupCachedData(s, b.logicalPlan)
+      .exists(_.cachedRepresentation.cacheBuilder eq b)
+    cm.lookupCachedData(d).map(_.cachedRepresentation.cacheBuilder).fold(df) { b =>
+      leaves.synchronized {
+        leaves.keySet.removeIf(k => !live(k))
+        Option(leaves.get(b))
+      }.getOrElse {
+        // built outside the lock: building runs the frame's shuffle jobs
+        val leaf = org.apache.spark.sql.classic.Dataset.ofRows(s, LogicalRDD.fromDataset(
+          s.sessionState.executePlan(d.logicalPlan).toRdd, d, isStreaming = false))
+        leaves.synchronized(Option(leaves.putIfAbsent(b, leaf)).getOrElse(leaf))
+      }
+    }
+  }
+  private val leaves =
+    new java.util.IdentityHashMap[CachedRDDBuilder, org.apache.spark.sql.DataFrame]()
+
+  /** How many entries the session's CacheManager holds. */
+  def cachedEntryCount(spark: org.apache.spark.sql.SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.numCachedEntries
 }

@@ -194,10 +194,10 @@ class CurationOpsSpec extends SparkSpec {
     // vocabulary/bucket-sized, the selection k rows)
     assert(plan.contains("BroadcastHashJoin"),
       s"selected chain plans no broadcast join:\n$plan")
-    // the Gumbel top-k rides the bounded-heap rewrite, not a global
-    // ranking window
-    assert(plan.contains("partial_graft_topk_rows"),
-      s"DSIR selection shows no bounded-heap partials:\n$plan")
+    // the Gumbel top-k is a bounded TakeOrderedAndProject (a heap per
+    // partition), not a global ranking window
+    assert(plan.contains("TakeOrderedAndProject"),
+      s"DSIR selection is not a bounded top-k:\n$plan")
     assert(!plan.contains("CartesianProduct"),
       s"selected chain plans a cartesian product:\n$plan")
   }
@@ -277,5 +277,123 @@ class CurationOpsSpec extends SparkSpec {
     // (a corpus-shingle-sized shuffle) must stay gone
     assert(!plan.contains("count(distinct"),
       s"probe-bit AND must not need a distinct aggregation:\n$plan")
+  }
+
+  // ---- the stage-list runner: what a chain stores, shares and frees --
+
+  /** (CacheManager entries, persistent RDD ids) of the session. */
+  private def cacheState(): (Int, Set[Int]) =
+    (org.apache.spark.sql.graft.ColumnBridge.cachedEntryCount(spark),
+      spark.sparkContext.getPersistentRDDs.keySet.toSet)
+
+  /** c6's inputs: (docs, eval, labeled, target). */
+  private def selectionInputs() = {
+    val docs = table("documents")
+    (docs, docs.filter(col("doc_id") % 25 === 0),
+      docs.filter(graft.operators.Sampling.hashBucket(col("doc_id"), 5) =!= 0),
+      docs.filter(col("source").isin("src0", "src1")))
+  }
+
+  /** (doc_id, url, html) pages over the test corpus; site3.com blocked. */
+  private def crawlPages() = table("documents").select(col("doc_id"),
+    concat(lit("http://site"), (col("doc_id") % 7).cast("string"),
+      lit(".com/p/"), col("doc_id").cast("string")).as("url"),
+    concat(lit("<html><body><p>"), col("text"), lit("</p></body></html>")).as("html"))
+
+  test("attrition reports leave no cache entry or persistent RDD behind") {
+    val (docs, eval, labeled, target) = selectionInputs()
+    val (m, pri, dsir) = graft.LlmCuration.selectionArtifacts(docs,
+      labeled, target, col("doc_id"), col("text"), col("lang"),
+      keepLabel = "en", minMargin = 1.0)
+    Seq(m, pri, dsir).foreach(_.persist().count())
+    try {
+      val reports = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "attritionReport" -> (() => graft.LlmCuration.attritionReport(docs,
+          eval, col("doc_id"), col("text"))),
+        "attritionReportSelected" -> (() =>
+          graft.LlmCuration.attritionReportSelected(docs, eval, labeled,
+            target, col("doc_id"), col("text"), col("lang"),
+            keepLabel = "en", minMargin = 1.0, k = 20)),
+        "attritionReportServing" -> (() =>
+          graft.LlmCuration.attritionReportServing(docs, eval, m, pri, dsir,
+            col("doc_id"), col("text"), keepLabel = "en", minMargin = 1.0,
+            k = 20)),
+        "attritionReportCrawl" -> (() =>
+          graft.LlmCuration.attritionReportCrawl(crawlPages(), col("doc_id"),
+            col("url"), col("html"), Seq("site3.com"), Nil)))
+      reports.foreach { case (name, report) =>
+        val before = cacheState()
+        assert(report().collect().nonEmpty)
+        assert(cacheState() === before,
+          s"$name left cache state behind: before $before, after ${cacheState()}")
+      }
+    } finally Seq(m, pri, dsir).foreach(_.unpersist(): Unit)
+  }
+
+  test("a repeated runSelectedServing call shares every stored stage") {
+    val (docs, eval, labeled, target) = selectionInputs()
+    val (m, pri, dsir) = graft.LlmCuration.selectionArtifacts(docs,
+      labeled, target, col("doc_id"), col("text"), col("lang"),
+      keepLabel = "en", minMargin = 1.0)
+    Seq(m, pri, dsir).foreach(_.persist().count())
+    def serve() = graft.LlmCuration.runSelectedServing(docs, eval, m, pri,
+        dsir, col("doc_id"), col("text"), keepLabel = "en", minMargin = 1.0,
+        k = 20)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    try {
+      val first = serve()
+      val after1 = cacheState()
+      assert(serve() === first)
+      assert(cacheState() === after1,
+        s"the second identical call stored again: $after1 -> ${cacheState()}")
+    } finally {
+      Seq(m, pri, dsir).foreach(_.unpersist(): Unit)
+      spark.catalog.clearCache()
+    }
+  }
+
+  test("attritionReportCrawl's survivors equal run over the same extracted corpus") {
+    val pages = crawlPages()
+    val rows = graft.LlmCuration.attritionReportCrawl(pages, col("doc_id"),
+        col("url"), col("html"), Seq("site3.com"), Nil)
+      .orderBy("stage_no").collect()
+      .map(r => (r.getString(1), r.getLong(2), r.getLong(3)))
+    assert(rows.map(_._1).toSeq ===
+      Seq("url_gate", "extract", "gate", "exact_dedup", "near_dup"))
+    rows.sliding(2).foreach { case Array(a, b) =>
+      assert(a._3 === b._2, s"stage ${a._1} out != stage ${b._1} in") }
+    // the same corpus built independently: allowed pages, extracted
+    val allowed = graft.text.Urls.blocklistGate(pages, col("doc_id"),
+      col("url"), Seq("site3.com")).filter(col("allowed")).select("doc_id")
+    assert(rows.head._3 === allowed.count())
+    assert(rows.head._3 < rows.head._2, "fixture must block some pages")
+    val extracted = graft.text.Html.extract(pages.join(allowed, "doc_id"),
+        col("doc_id"), col("html"))
+      .select(col("doc_id"), col("extracted").as("text"))
+      .filter(length(col("text")) > 0)
+    assert(rows(1)._3 === extracted.count())
+    val survivors = graft.LlmCuration.run(extracted, col("doc_id"),
+      col("text")).count()
+    assert(rows.last._3 === survivors, "crawl report disagrees with run")
+  }
+
+  test("c6 chain plans over stage leaves: analyzed plan no larger than before the cut change") {
+    val (docs, eval, labeled, target) = selectionInputs()
+    val out = graft.LlmCuration.runSelected(docs, eval, labeled, target,
+      col("doc_id"), col("text"), col("lang"),
+      keepLabel = "en", minMargin = 1.0, k = 100)
+    // the tree the analyzer and optimizer walk (a cached relation's
+    // physical plan is display-only, not a child); attribute ids and
+    // the leaf kind (stage leaf vs checkpoint RDD) are normalized away
+    val nodes = out.queryExecution.analyzed.collect {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LeafNode => "leaf"
+      case p => p.simpleString(25).replaceAll("#\\d+", "#")
+    }
+    // the localCheckpoint cut this one replaced planned the same chain
+    // as 18 nodes / 531 normalized chars on this fixture: the leaf cut
+    // must not grow what Catalyst walks
+    val text = nodes.mkString("\n")
+    assert(nodes.size <= 18 && text.length <= 531,
+      s"c6's analyzed plan grew to ${nodes.size} nodes / ${text.length} chars:\n$text")
   }
 }

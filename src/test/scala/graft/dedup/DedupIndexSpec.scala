@@ -181,6 +181,51 @@ class DedupIndexSpec extends SparkSpec {
     }
   }
 
+  test("reband to the committed plan at a new bucket count rebuckets the bands") {
+    import spark.implicits._
+    val docs = (1 to 20).map(i => (i.toLong, s"w$i shared words here w${i + 1}"))
+      .toDF("doc_id", "text")
+    def bandBuckets(v: Int): Option[Int] = {
+      val pb = graft.sources.BucketedStore.backingVersion(spark, "dbk", "bands", v)
+      spark.sessionState.catalog.getTableMetadata(
+          org.apache.spark.sql.catalyst.TableIdentifier(s"dbk_bands_v$pb"))
+        .bucketSpec.map(_.numBuckets)
+    }
+    TextDedup.dropDedupIndexBucketed(spark, "dbk")
+    try {
+      val v0 = TextDedup.writeDedupIndexBucketed(docs, col("doc_id"),
+        col("text"), "dbk", buckets = 4)
+      assert(bandBuckets(v0) === Some(4))
+      // same (bands, rows) plan, different bucket count: a real reband
+      val v1 = TextDedup.rebandDedupIndexBucketed(spark, "dbk",
+        TextDedup.Bands, TextDedup.RowsPerBand, buckets = 8)
+      assert(v1 === v0 + 1, "a bucket-count change must commit a version")
+      assert(bandBuckets(v1) === Some(8))
+      // now already at (plan, 8 buckets): the reband is the no-op
+      assert(TextDedup.rebandDedupIndexBucketed(spark, "dbk",
+        TextDedup.Bands, TextDedup.RowsPerBand, buckets = 8) === v1)
+    } finally TextDedup.dropDedupIndexBucketed(spark, "dbk")
+  }
+
+  test("committedPlan of a not-yet-committed version is not pinned") {
+    import spark.implicits._
+    val docs = (1 to 20).map(i => (i.toLong, s"w$i shared words here w${i + 1}"))
+      .toDF("doc_id", "text")
+    TextDedup.dropDedupIndexBucketed(spark, "dcp")
+    try {
+      val v0 = TextDedup.writeDedupIndexBucketed(docs, col("doc_id"),
+        col("text"), "dcp", buckets = 4)
+      // asked before version v0+1 exists: the legacy default
+      assert(TextDedup.committedPlan(spark, "dcp", v0 + 1) ===
+        ((TextDedup.Bands, TextDedup.RowsPerBand)))
+      val v1 = TextDedup.rebandDedupIndexBucketed(spark, "dcp", 16, 1,
+        buckets = 4)
+      assert(v1 === v0 + 1)
+      assert(TextDedup.committedPlan(spark, "dcp", v1) === ((16, 1)),
+        "the committed plan must win over the default read before it existed")
+    } finally TextDedup.dropDedupIndexBucketed(spark, "dcp")
+  }
+
   test("measured retune: reband re-derives bands only; probe follows the plan") {
     import spark.implicits._
     // a corpus whose near-dup pairs the default (4,4) mostly MISSES

@@ -383,6 +383,19 @@ class TablesSpec extends SparkSpec {
     assert(ev.schema("ts").dataType === TimestampType)
     assert(ev.count() > 0)
   }
+
+  test("load after an append to the table directory sees the new rows") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-tables-append").toString
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$dir/feed.parquet")
+    assert(Tables.load(spark, dir, "feed").count() === 2)
+    // unchanged listing: the memoized plan is reused as-is
+    assert(Tables.load(spark, dir, "feed") eq Tables.load(spark, dir, "feed"))
+    Seq((3L, "c")).toDF("k", "v").write.mode("append").parquet(s"$dir/feed.parquet")
+    assert(spark.read.parquet(s"$dir/feed.parquet").count() === 3)
+    assert(Tables.load(spark, dir, "feed").count() === 3,
+      "a load after the append must list the new file")
+  }
 }
 
 class BucketedStoreCarrySpec extends SparkSpec {

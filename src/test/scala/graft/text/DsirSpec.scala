@@ -188,7 +188,29 @@ class DsirSpec extends SparkSpec {
     // sums (4096 rows each); the CORPUS-sized top-k must not be one
     assert(!sPlan.contains("row_number"),
       s"Gumbel top-k still plans a row_number Window (global sort!):\n$sPlan")
-    assert(sPlan.contains("partial_graft_topk_rows"),
-      s"Gumbel top-k shows no bounded-heap partials:\n$sPlan")
+    assert(sPlan.contains("TakeOrderedAndProject"),
+      s"Gumbel top-k is not a bounded TakeOrderedAndProject:\n$sPlan")
+  }
+
+  test("resampleWith: no Window in the ANALYZED plan — scale-safe without the rewrite rule") {
+    val docs = table("documents")
+    val isTgt = col("source").isin("src0", "src1")
+    val raw = docs.filter(!isTgt)
+    // a frozen model as a local relation, so the only plan under test
+    // is the draw's (the model build's own bucket totals are windows)
+    val m = Dsir.model(docs.filter(isTgt), raw, col("text"))
+    val frozen = spark.createDataFrame(m.collectAsList(), m.schema)
+    val sel = Dsir.resampleWith(frozen, raw, col("doc_id"), col("text"), k = 25)
+    // analyzed, not optimized: GraftExtensions' optimizer rule must not
+    // be what keeps the corpus-wide top-k off one partition
+    val windows = sel.queryExecution.analyzed.collect {
+      case w: org.apache.spark.sql.catalyst.plans.logical.Window => w
+    }
+    assert(windows.isEmpty, s"resampleWith still analyzes to a Window:\n${sel.queryExecution.analyzed}")
+    assert(sel.count() === 25)
+    // the in-place form draws the same k docs from the same inputs
+    assert(sel.select("doc_id").collect().toSet ===
+      Dsir.resample(docs.filter(isTgt), raw, col("doc_id"), col("text"), k = 25)
+        .select("doc_id").collect().toSet)
   }
 }
