@@ -53,8 +53,8 @@ object Caching {
     * pipeline spent 4.4 s in analysis/planning before its first job).
     * Over the leaf each stage is analyzed once, so planning is
     * O(stages); the boundary is stored once, in its CacheManager
-    * entry; and sibling calls that compose the identical stages get
-    * the identical leaf back, so every stage of theirs — not just the
+    * entry; and sibling calls that compose the identical stages read
+    * the identical leaf, so every stage of theirs — not just the
     * first — matches the cache and shares one materialization.
     * Building the leaf runs the frame's shuffle stages (adaptive
     * execution materializes them to plan the cache scan); its final

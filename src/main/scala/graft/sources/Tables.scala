@@ -29,11 +29,13 @@ object Tables {
     * METADATA work, re-paid by every query invocation (most queries
     * load 1-3 tables; the fleet pays it thousands of times per run).
     * A memoized plan is reused only while the table path's file
-    * listing (names, sizes, modification times — one `listStatus`) is
-    * unchanged: an append, rewrite or delete under the path makes the
-    * next load re-read it, so a long-lived session (a scheduler loop
-    * over a growing feed) sees new files. No data or results are
-    * cached (every action still computes from the parquet bytes;
+    * listing (path, size and modification time of every file under it,
+    * partition directories included — one recursive `listFiles`) is
+    * unchanged: an append, rewrite or delete anywhere under the path
+    * makes the next load re-read it, so a long-lived session (a
+    * scheduler loop over a growing feed) sees new files, also on
+    * stores that keep no directory modification times. No data or
+    * results are cached (every action still computes from the parquet bytes;
     * `clearCache()` is unaffected because nothing here enters the
     * block manager). Keyed WEAKLY on the session (test suites create
     * and stop many sessions; a stopped session's plans must not pin
@@ -55,10 +57,15 @@ object Tables {
     val path = new org.apache.hadoop.fs.Path(s"$sfDir/$name.parquet")
     // a missing path lists as empty; the read below then raises
     // Spark's own not-found error
-    val listing: Listing = scala.util.Try(
-      path.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(path)
-        .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).toSeq.sorted)
-      .getOrElse(Nil)
+    val listing: Listing = scala.util.Try {
+      val files = path.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(path, true)
+      val b = Seq.newBuilder[(String, Long, Long)]
+      while (files.hasNext) {
+        val f = files.next()
+        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      b.result().sorted
+    }.getOrElse(Nil)
     perSession.get((sfDir, name)).collect { case (`listing`, df) => df }.getOrElse {
       val raw = spark.read.parquet(path.toString)
       val df = if (computeHeavy(name)) spread(spark, raw) else raw

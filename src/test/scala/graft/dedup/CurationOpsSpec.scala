@@ -283,7 +283,7 @@ class CurationOpsSpec extends SparkSpec {
 
   /** (CacheManager entries, persistent RDD ids) of the session. */
   private def cacheState(): (Int, Set[Int]) =
-    (org.apache.spark.sql.graft.ColumnBridge.cachedEntryCount(spark),
+    (org.apache.spark.sql.graft.CacheProbe.entryCount(spark),
       spark.sparkContext.getPersistentRDDs.keySet.toSet)
 
   /** c6's inputs: (docs, eval, labeled, target). */

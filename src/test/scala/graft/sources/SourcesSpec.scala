@@ -396,6 +396,26 @@ class TablesSpec extends SparkSpec {
     assert(Tables.load(spark, dir, "feed").count() === 3,
       "a load after the append must list the new file")
   }
+
+  test("load after a file lands in a partition directory sees its rows") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-tables-part").toString
+    Seq((1L, "a", 1), (2L, "b", 2)).toDF("k", "v", "p")
+      .write.partitionBy("p").parquet(s"$dir/feed.parquet")
+    assert(Tables.load(spark, dir, "feed").count() === 2)
+    // a writer that adds one file inside an existing partition, leaving
+    // the table directory's own entries as they were; object stores
+    // keep no directory mtimes, so the partition's is put back too
+    Seq((3L, "c")).toDF("k", "v").coalesce(1).write.parquet(s"$dir/extra")
+    val part = new java.io.File(s"$dir/extra").listFiles().filter(_.getName.endsWith(".parquet")).head
+    val p1 = new java.io.File(s"$dir/feed.parquet/p=1")
+    val mtime = p1.lastModified()
+    Files.move(part.toPath, p1.toPath.resolve(part.getName))
+    assert(p1.setLastModified(mtime))
+    assert(spark.read.parquet(s"$dir/feed.parquet").count() === 3)
+    assert(Tables.load(spark, dir, "feed").count() === 3,
+      "a load after the partition append must list the new file")
+  }
 }
 
 class BucketedStoreCarrySpec extends SparkSpec {
